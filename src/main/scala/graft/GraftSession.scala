@@ -1,75 +1,88 @@
 package graft
 
+import java.io.File
+
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with scale-aware defaults.
-  *
-  * The engine targets multi-executor clusters; tests run `local[N]`.
-  * Defaults chosen for 100 TB readiness:
-  *  - AQE on (runtime re-plan, skew-join splitting, partition coalescing)
-  *  - shuffle partitions sized to cores locally (clusters override via
-  *    `spark.sql.adaptive.coalescePartitions` + explicit conf)
-  *  - UTC session timezone so date/time semantics are deployment-invariant
+/** The engine's one session factory: Bench, Verify, Probe, the demos,
+  * the benchmark harness and the test suite all build their session
+  * through [[create]], so they all run the conf that ships. It sets
+  * only what differs from Spark's defaults (AQE, with partition
+  * coalescing and skew-join splitting, is already on by default).
   */
 object GraftSession {
 
-  /** Scratch directory for shuffle blocks and checkpoint spill.
+  /** Scratch directory for shuffle blocks and checkpoint spill:
+    * `SPARK_LOCAL_DIRS` when set (a cluster points it at its NVMe
+    * scratch), else a per-JVM subdir of tmpfs.
+    *
     * Thread-dump profiling showed the engine file-METADATA-bound on
     * its many small shuffles (FileOutputStream.open / mmap / unmap was
     * ~80% of runnable executor samples): this host's /tmp (ext4 on
     * virtio) costs ~0.22 ms per file create+delete, tmpfs ~0.01 ms.
-    * Use the RAM-backed dir when present — the standard "fast local
-    * disks for spark.local.dir" deployment guidance, applied to a
-    * RAM-rich single node; a cluster sets SPARK_LOCAL_DIRS to its
-    * NVMe scratch instead and this default never engages.
+    * tmpfs is only used when it has real headroom: its blocks consume
+    * RAM (typically capped at 50% of it), so on a RAM-tight host a big
+    * shuffle would hit ENOSPC where disk-backed /tmp succeeds. 16 GiB
+    * usable is far above anything the bench/verify workloads write.
+    *
+    * Each JVM writes under `graft_spark_local/<pid>`. A crashed JVM
+    * leaks its subdir in RAM until reboot, so every call first removes
+    * the subdirs whose pid has no live process — never a live
+    * session's, however long it has run.
     */
-  /** tmpfs is only the default when it has real headroom: shuffle
-    * blocks and spill files on tmpfs consume RAM (typically capped at
-    * 50% of it), so on a RAM-tight host a big shuffle would hit ENOSPC
-    * or worsen OOM pressure where disk-backed /tmp succeeds. 16 GiB
-    * usable is far above anything the bench/verify workloads write and
-    * far below the cap on any host where the default makes sense.
-    */
-  private val MinShmUsableBytes = 16L << 30
-
   def fastLocalDir: String =
     sys.env.getOrElse("SPARK_LOCAL_DIRS", {
-      val shm = new java.io.File("/dev/shm")
+      val shm = new File("/dev/shm")
       if (shm.isDirectory && shm.canWrite &&
           shm.getUsableSpace >= MinShmUsableBytes) {
-        val d = new java.io.File(shm, "graft_spark_local")
+        val root = new File(shm, "graft_spark_local")
+        sweepDeadOwners(root)
+        val d = new File(root, ProcessHandle.current().pid().toString)
         d.mkdirs()
-        // a crashed JVM leaks its spark-<uuid> scratch subdir in RAM
-        // until reboot; sweep anything untouched for a day (live
-        // sessions are hours at most here, and Spark removes its own
-        // dir on clean shutdown)
-        val dayAgo = System.currentTimeMillis() - 24L * 3600 * 1000
-        Option(d.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isDirectory && f.lastModified < dayAgo)
-          .foreach(deleteRecursively)
         d.getAbsolutePath
       } else System.getProperty("java.io.tmpdir", "/tmp")
     })
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private val MinShmUsableBytes = 16L << 30
+
+  /** Deletes the subdirs of `root` named after a pid that has no live
+    * process. Entries not named by a pid are left alone.
+    */
+  private[graft] def sweepDeadOwners(root: File): Unit =
+    Option(root.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.toLongOption.exists(pid =>
+        !ProcessHandle.of(pid).filter(_.isAlive).isPresent))
+      .foreach(deleteRecursively)
+
+  private def deleteRecursively(f: File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete()
     ()
   }
 
-  /** Build or reuse a session. `master` defaults to the env/driver-provided
-    * setting; callers inside Verify/Bench pass their own.
+  /** Managed tables (`saveAsTable`) go here for every caller, not into
+    * a `spark-warehouse` dir under whatever the working directory is.
     */
-  def create(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-             shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+  private val WarehouseDir =
+    new File(System.getProperty("java.io.tmpdir", "/tmp"), "graft_warehouse").getAbsolutePath
+
+  private def cpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
+  /** Build or reuse the session. `master` and `shufflePartitions`
+    * default to `$SPARK_GRAFT_CPUS`, else the machine's core count.
+    */
+  def create(master: String = s"local[$cpus]",
+             shufflePartitions: Int = cpus.toInt,
              appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
+      // the one registration route for sessions the engine builds; it
+      // carries over to newSession()
       .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
       // ObjectHashAggregate falls back to SORT-BASED aggregation after
       // 128 distinct keys per task (the Spark default) - pathological for
       // this engine, whose collect_list/collect_set/top-k aggregates
@@ -87,9 +100,8 @@ object GraftSession {
       // > 200 reducers (any real-scale exchange) never used bypass, so
       // the setting is inert at cluster scale.
       .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.local.dir", GraftSession.fastLocalDir)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.local.dir", fastLocalDir)
+      .config("spark.sql.warehouse.dir", WarehouseDir)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,34 +10,7 @@ object Verify {
     val nameFilter: String => Boolean =
       if (args.length > 2) { val ps = args(2).split(","); n => ps.exists(n.startsWith) }
       else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // ObjectHashAggregate falls back to SORT-BASED aggregation after
-      // 128 distinct keys per task (the Spark default) - pathological for
-      // this engine, whose collect_list/collect_set/top-k aggregates
-      // routinely see 10^4-10^5 bounded-size groups per task. 2^17
-      // entries of bounded per-group state (<= a few hundred bytes each)
-      // is tens of MB per task at ANY scale factor or cluster size; the
-      // fallback still protects truly unbounded group counts.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // Tiny iterative shuffles write R files PER MAP TASK on the
-      // bypass-merge path (default threshold 200 covers every reduce
-      // count this engine's fixpoint loops use); jstack sampling showed
-      // loop tasks inside BypassMergeSortShuffleWriter stream setup,
-      // not compute. Threshold 2 routes them to the serialized
-      // (Unsafe) writer: ONE file + index per map task. Shuffles with
-      // > 200 reducers (any real-scale exchange) never used bypass, so
-      // the setting is inert at cluster scale.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.local.dir", GraftSession.fastLocalDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftExtensions.register(spark)
+    val spark = GraftSession.create(appName = "graft-verify")
     // Fail loudly BEFORE dumping anything if the testdata encoding
     // drifted (round-6 lesson: a silent ts mis-decode red-flagged 16
     // queries). Throws IllegalStateException naming the drift.

@@ -19,12 +19,10 @@ import org.apache.spark.sql.internal.SQLConf
   * `spark.graft.failOnCartesian=true` to turn sightings into plan-time
   * errors — CI can enforce what a review would have flagged.
   *
-  * Registered through BOTH extension routes: `injectOptimizerRule`
-  * from the `spark.sql.extensions` plugin class, and
-  * `spark.experimental.extraOptimizations` from the runtime
-  * `GraftExtensions.register` path — demonstrating the
-  * `Rule[LogicalPlan]` extension point alongside the native
-  * expressions.
+  * Installed by `injectOptimizerRule` in the `spark.sql.extensions`
+  * class that `GraftSession.create` sets, and on a caller's own
+  * session by `GraftExtensions.register`
+  * (`spark.experimental.extraOptimizations`).
   */
 object CartesianGuard extends Rule[LogicalPlan] {
 

@@ -7,11 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Catalyst extension point: registers the engine's native expressions
   * as SQL functions.
   *
-  * Two registration paths:
-  *  - config: `spark.sql.extensions=graft.expressions.GraftExtensions`
-  *    (GraftSession sets this) — the standard plugin route;
-  *  - runtime: `GraftExtensions.register(spark)` for sessions built
-  *    elsewhere (Verify/Bench, tests).
+  * Every session the engine builds comes from `GraftSession.create`,
+  * which sets `spark.sql.extensions=graft.expressions.GraftExtensions`;
+  * sessions from `newSession()` inherit it. `GraftExtensions.register`
+  * is only for a caller's own session, built without that setting: the
+  * public entry points (`SparkEntry.entry`, `SparkEntry.queries`, the
+  * `graft.operators` and `graft.curation` operators) call it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.queries.OracleSql._
 
 /** Round-8 batch 2 — applied analytics over the star schema: graph
   * locality (per-node clustering, partition modularity), customer
@@ -19,12 +20,6 @@ import graft.Tables
   * reduction is integer/DECIMAL-exact with one final double formula.
   */
 object AnalyticsQueries {
-
-  private val duckTokens = "string_split_regex(trim(text), '\\s+')"
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64 / MinhashKernel). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   // --------------------------------------------------------------- q245
 
@@ -560,7 +555,6 @@ object AnalyticsQueries {
   val q252 = Q("q252_retrieval_metrics",
     (s, dir) => {
       import s.implicits._
-      graft.expressions.GraftExtensions.register(s)
       val disc = Seq((1, 1000000L), (2, 630930L), (3, 500000L), (4, 430677L),
         (5, 386853L), (6, 356207L), (7, 333333L), (8, 315465L),
         (9, 301030L), (10, 289065L)).toDF("rnk", "disc_u")
@@ -680,7 +674,6 @@ object AnalyticsQueries {
     */
   val q253 = Q("q253_jw_fuzzy_join",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       // pinned block-keyed repartition (r15 opt): the documents scan is
       // one split locally and AQE coalesces the blocked self-join to a
       // single task, serializing the O(pairs) Jaro-Winkler kernel; an
@@ -891,7 +884,6 @@ object AnalyticsQueries {
     */
   val q262 = Q("q262_fuzzy_entity_clusters",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val p = Tables.load(s, dir, "documents")
         .select(col("doc_id"), substring(col("text"), 1, 48).as("t"),
           element_at(split(col("text"), " "), 1).as("blk"))
@@ -1314,9 +1306,9 @@ object AnalyticsQueries {
                              vec_id
                     LIMIT 200),
       sims AS (SELECT a.vec_id, b.vec_id AS nb,
-                      ${DataQueries.duckDot("a.embedding", "b.embedding")}
-                        / (sqrt(${DataQueries.duckDot("a.embedding", "a.embedding")})
-                           * sqrt(${DataQueries.duckDot("b.embedding", "b.embedding")})) AS cos
+                      ${duckDot("a.embedding", "b.embedding")}
+                        / (sqrt(${duckDot("a.embedding", "a.embedding")})
+                           * sqrt(${duckDot("b.embedding", "b.embedding")})) AS cos
                FROM embeddings a JOIN embeddings b
                  ON a.vec_id <> b.vec_id
                WHERE a.vec_id IN (SELECT vec_id FROM samp)),
@@ -1326,9 +1318,9 @@ object AnalyticsQueries {
                 FROM sims) WHERE r = 1),
       nbs AS (SELECT DISTINCT nb FROM t1s),
       sims2 AS (SELECT a.vec_id, b.vec_id AS nb,
-                       ${DataQueries.duckDot("a.embedding", "b.embedding")}
-                         / (sqrt(${DataQueries.duckDot("a.embedding", "a.embedding")})
-                            * sqrt(${DataQueries.duckDot("b.embedding", "b.embedding")})) AS cos
+                       ${duckDot("a.embedding", "b.embedding")}
+                         / (sqrt(${duckDot("a.embedding", "a.embedding")})
+                            * sqrt(${duckDot("b.embedding", "b.embedding")})) AS cos
                 FROM embeddings a JOIN embeddings b
                   ON a.vec_id <> b.vec_id
                 WHERE a.vec_id IN (SELECT nb FROM nbs)),

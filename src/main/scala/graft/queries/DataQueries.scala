@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.OracleSql._
 import graft.functions.Hashing
 import graft.operators.{AudioCodec, Dedup, MultimodalCodec, MultimodalStub, Similarity, TextCodec, VideoCodec, TextAnalysis => TA}
 import graft.operators.Relational.dedupKeepFirst
@@ -27,21 +28,6 @@ object DataQueries {
     "zh" -> Seq("zh1", "zh2"))
 
   // ---- shared DuckDB SQL fragments (mirror the Scala operators) ----
-
-  private val duckTokens = "string_split_regex(trim(text), '\\s+')"
-
-  /** Left-fold double dot product of two list columns — bit-identical
-    * to Similarity.dot (both fold products in index order). */
-  private[queries] def duckDot(a: String, b: String): String =
-    s"list_reduce(list_transform(range(1, len($a)+1), " +
-      s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"
-
-  private[queries] def duckCos(a: String, b: String): String =
-    s"round(${duckDot(a, b)} / (sqrt(${duckDot(a, a)}) * sqrt(${duckDot(b, b)})), 6)"
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   private def duckList(xs: Seq[String]): String =
     xs.map(s => s"'$s'").mkString("[", ",", "]")
@@ -279,7 +265,6 @@ object DataQueries {
     */
   val q40 = Q("q40_embed_neardup",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val tables = 6; val planes = 3
       // materialized once (lazy local checkpoint): referenced by the
       // bucket generation and both verification joins
@@ -518,7 +503,6 @@ object DataQueries {
   val q48 = Q("q48_ann_ivf",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.expressions.GraftExtensions.register(s)
       val emb = Tables.load(s, dir, "embeddings")
       val cents = emb
         .select(col("label"), posexplode(col("embedding")).as(Seq("_pos", "_v")))
@@ -2122,7 +2106,6 @@ object DataQueries {
     */
   val q230 = Q("q230_reliability_brier",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val emb = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           when(col("label") === 0, 1L).otherwise(0L).as("y"))
@@ -2222,7 +2205,6 @@ object DataQueries {
     */
   val q296 = Q("q296_mmr_rerank",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val emb = Tables.load(s, dir, "embeddings")
         .withColumn("_norm", sqrt(Similarity.dotNative(col("embedding"), col("embedding"))))
         .localCheckpoint(false) // query pick + relevance scan + pair sims
@@ -3724,7 +3706,6 @@ object DataQueries {
     */
   val q362 = Q("q362_anisotropy",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val emb = Tables.load(s, dir, "embeddings")
       val unit = emb.select(col("label").cast("long").as("label"), col("embedding"),
           expr("sqrt(graft_dot(embedding, embedding))").as("nrm"))
@@ -3863,7 +3844,6 @@ object DataQueries {
     */
   val q364 = Q("q364_source_containment",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       // conf-widened hash space (Dedup.ShingleBitsKey — the scaladoc
       // there carries the birthday-bound arithmetic this query's own
       // NOTE used to state); the oracle replays the 31-bit default,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.OracleSql._
 import graft.functions.Hashing
 import graft.functions.ScalarFunctions.dsum
 import graft.operators.{AsOfJoin, Relational, TextAnalysis}
@@ -19,10 +20,6 @@ import graft.operators.{AsOfJoin, Relational, TextAnalysis}
   * bit-for-bit.
   */
 object EventQueries {
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   /** q54 — backward as-of join: each error event picks the same user's
     * most recent purchase at-or-before it (point-in-time lookup).

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.queries.OracleSql._
 import graft.operators.{Dedup, GraphOps, Similarity}
 
 /** Round-4 batch — graph label-doubling, exact set-similarity join,
@@ -32,12 +33,6 @@ import graft.operators.{Dedup, GraphOps, Similarity}
   * fold, total ORDER BY on each output.
   */
 object ExtQueries {
-
-  private val duckTokens = "string_split_regex(trim(text), '\\s+')"
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64 / MinhashKernel). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   // --------------------------------------------------------------- q126
 
@@ -156,7 +151,6 @@ object ExtQueries {
     */
   val q128 = Q("q128_setsim_join",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       // conf-widened hash space (Dedup.ShingleBitsKey): exact set
       // similarity is exactly where 31-bit collisions at >10M grams
       // show up as phantom intersections; the committed oracle replays
@@ -592,7 +586,6 @@ object ExtQueries {
     */
   val q137 = Q("q137_ann_multiprobe",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val planes = 8
       val emb = Tables.load(s, dir, "embeddings")
       val bucketed = emb.withColumn("_bucket",
@@ -625,7 +618,7 @@ object ExtQueries {
              FROM embeddings),
       q AS (SELECT embedding AS qv, bucket AS qb FROM b WHERE vec_id = 0),
       pb AS (SELECT qv, unnest($probeList) AS p FROM q)
-      SELECT vec_id, ${DataQueries.duckCos("embedding", "qv")} AS cos_sim
+      SELECT vec_id, ${duckCos("embedding", "qv")} AS cos_sim
       FROM b JOIN pb ON bucket = p
       ORDER BY cos_sim DESC, vec_id ASC LIMIT 10"""
     })
@@ -928,7 +921,7 @@ object ExtQueries {
              GROUP BY label, d),
       v AS (SELECT label, list(cv ORDER BY dim) AS vec FROM c GROUP BY label)
       SELECT a.label AS la, b.label AS lb,
-             ${DataQueries.duckCos("a.vec", "b.vec")} AS cos_sim
+             ${duckCos("a.vec", "b.vec")} AS cos_sim
       FROM v a JOIN v b ON a.label < b.label
       ORDER BY la, lb"""))
 
@@ -1049,7 +1042,6 @@ object ExtQueries {
     */
   val q146 = Q("q146_rrf_fusion",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       // r16: compiled kernel (graft_dot now accepts double arrays) —
       // the interpreted zip_with/aggregate fold was ~1.1 s of
       // single-task CPU here; same left-to-right double fold
@@ -1091,7 +1083,7 @@ object ExtQueries {
     },
     Some(s"""
       WITH q0 AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-      a AS (SELECT vec_id, ${DataQueries.duckCos("embedding", "qv")} AS cs
+      a AS (SELECT vec_id, ${duckCos("embedding", "qv")} AS cs
             FROM embeddings CROSS JOIN q0 WHERE vec_id <> 0),
       ta0 AS (SELECT vec_id, cs FROM a ORDER BY cs DESC, vec_id LIMIT 100),
       ta AS (SELECT vec_id, row_number() OVER (ORDER BY cs DESC, vec_id) AS ra FROM ta0),
@@ -1104,9 +1096,9 @@ object ExtQueries {
             FROM embeddings e JOIN sc ON e.vec_id = sc.vec_id),
       qd AS (SELECT dq AS qdq FROM d WHERE vec_id = 0),
       b AS (SELECT vec_id,
-              round(${DataQueries.duckDot("dq", "qdq")}
-                / (sqrt(${DataQueries.duckDot("dq", "dq")})
-                   * sqrt(${DataQueries.duckDot("qdq", "qdq")})), 6) AS cs
+              round(${duckDot("dq", "qdq")}
+                / (sqrt(${duckDot("dq", "dq")})
+                   * sqrt(${duckDot("qdq", "qdq")})), 6) AS cs
             FROM d CROSS JOIN qd WHERE vec_id <> 0),
       tb0 AS (SELECT vec_id, cs FROM b ORDER BY cs DESC, vec_id LIMIT 100),
       tb AS (SELECT vec_id, row_number() OVER (ORDER BY cs DESC, vec_id) AS rb FROM tb0),
@@ -1131,7 +1123,6 @@ object ExtQueries {
     */
   val q147 = Q("q147_feature_hash",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       Tables.load(s, dir, "documents")
         .filter(pmod(col("doc_id"), lit(97)) === 0)
         .select(col("doc_id"),
@@ -1168,7 +1159,6 @@ object ExtQueries {
     */
   val q148 = Q("q148_vocab_growth",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val first = Tables.load(s, dir, "documents")
         .select(expr("doc_id div 250").as("batch"),
           explode(call_function("graft_shingle_hash_list", col("text"), lit(1))).as("uh"))
@@ -1417,7 +1407,6 @@ object ExtQueries {
     */
   val q153 = Q("q153_source_similarity",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val coeffs = Dedup.minhashCoeffs(12)
       val hashed = Tables.load(s, dir, "documents")
         .select(col("source"),
@@ -1490,7 +1479,6 @@ object ExtQueries {
     */
   val q154 = Q("q154_sketch_merge",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val coeffs = Dedup.minhashCoeffs(12)
       val hashed = Tables.load(s, dir, "documents")
         .select(expr("doc_id div 100").as("shard"),
@@ -1668,7 +1656,6 @@ object ExtQueries {
     */
   val q158 = Q("q158_dedup_report",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val fams = Tables.load(s, dir, "documents")
         .select(graft.operators.TextAnalysis.contentFingerprint(col("text")).as("fp"))
         .groupBy("fp").agg(count(lit(1)).as("sz"))
@@ -1894,7 +1881,6 @@ object ExtQueries {
     */
   val q163 = Q("q163_triangle_count",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val items = Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct()
       val pairs = items.groupBy("l_orderkey")

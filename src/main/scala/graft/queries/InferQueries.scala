@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.queries.OracleSql._
 import graft.operators.Dedup
 
 /** Round-8 batch 1 — classical statistical inference at scale: the
@@ -25,12 +26,6 @@ import graft.operators.Dedup
   * PlanSpec's global-window whitelist).
   */
 object InferQueries {
-
-  private val duckTokens = "string_split_regex(trim(text), '\\s+')"
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64 / MinhashKernel). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   // --------------------------------------------------------------- q237
 
@@ -547,7 +542,6 @@ object InferQueries {
     */
   val q244 = Q("q244_js_divergence",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val tok = Tables.load(s, dir, "documents")
         .filter(col("source").isin("src0", "src1"))
         .select(when(col("source") === "src0", 1L).otherwise(0L).as("p"),
@@ -869,7 +863,6 @@ object InferQueries {
     */
   val q258 = Q("q258_capture_recapture",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val tok = Tables.load(s, dir, "documents")
         .filter(col("source").isin("src0", "src1"))
         .select(col("source"),
@@ -1025,7 +1018,6 @@ object InferQueries {
     */
   val q275 = Q("q275_weighted_jaccard",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val tok = Tables.load(s, dir, "documents")
         .filter(col("source").isin("src0", "src1"))
         .select(when(col("source") === "src0", 1L).otherwise(0L).as("p"),
@@ -1230,7 +1222,6 @@ object InferQueries {
     */
   val q278 = Q("q278_apriori_triples",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val items = Tables.load(s, dir, "lineitem")
         .join(broadcast(Tables.load(s, dir, "part")), col("l_partkey") === col("p_partkey"))
         .select(col("l_orderkey"), col("p_brand")).distinct()

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.OracleSql._
 import graft.functions.{Hashing, ScalarFunctions}
 import graft.operators.{Similarity, TextAnalysis => TA}
 
@@ -22,18 +23,6 @@ import graft.operators.{Similarity, TextAnalysis => TA}
   * already proves for q57/q77, and a total ORDER BY on every output.
   */
 object ScaleQueries {
-
-  private def duckDot(a: String, b: String): String =
-    s"list_reduce(list_transform(range(1, len($a)+1), " +
-      s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"
-
-  private def duckCos(a: String, b: String): String =
-    s"round(${duckDot(a, b)} / (sqrt(${duckDot(a, a)}) * sqrt(${duckDot(b, b)})), 6)"
-
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
-
-  private val duckTokens = "string_split_regex(trim(text), '\\s+')"
 
   // ---------------------------------------------------------------- q92
 
@@ -308,7 +297,6 @@ object ScaleQueries {
     */
   val q98 = Q("q98_hard_negatives",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val emb = Tables.load(s, dir, "embeddings")
       val anchors = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("anchor_id"), col("label").as("_al"),
@@ -614,7 +602,6 @@ object ScaleQueries {
     */
   val q105 = Q("q105_containment_pairs",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val docs = Tables.load(s, dir, "documents")
       val g8 = docs.select(col("doc_id"),
         explode(call_function("graft_shingle_hashes", col("text"), lit(8))).as("gh"))

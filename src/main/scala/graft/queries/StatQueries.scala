@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.OracleSql._
 import graft.operators.{Dedup, GraphOps}
 
 /** Round-3 batch 3 — distribution and propagation operators: token
@@ -24,12 +25,6 @@ import graft.operators.{Dedup, GraphOps}
   */
 object StatQueries {
 
-  private val duckTokens = "string_split_regex(trim(text), '\\s+')"
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64 / MinhashKernel). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
-
   // --------------------------------------------------------------- q107
 
   /** q107 — unigram Shannon entropy per document: H = ln(n) − Σ c·ln(c)/n
@@ -48,7 +43,6 @@ object StatQueries {
     */
   val q107 = Q("q107_token_entropy",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val cnt = Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           explode(call_function("graft_shingle_hash_list", col("text"), lit(1))).as("uh"))
@@ -331,7 +325,6 @@ object StatQueries {
     */
   val q112 = Q("q112_domain_overlap",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       // four consumers (both join sides + two size lookups) — cut the
       // explode+distinct lineage once or the token pass runs four times
       val st = Tables.load(s, dir, "documents")
@@ -432,7 +425,6 @@ object StatQueries {
     */
   val q115 = Q("q115_countmin",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val coeffs = Dedup.minhashCoeffs(4)
       val toks = Tables.load(s, dir, "documents")
         .select(explode(call_function("graft_shingle_hash_list", col("text"), lit(1))).as("uh"))
@@ -1145,7 +1137,6 @@ object StatQueries {
     */
   val q202 = Q("q202_adamic_adar",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val cs = Tables.load(s, dir, "orders")
         .join(Tables.load(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
@@ -2027,7 +2018,6 @@ object StatQueries {
     */
   val q222 = Q("q222_basket_lift",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val op = Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .distinct()
@@ -2401,7 +2391,6 @@ object StatQueries {
     */
   val q306 = Q("q306_betweenness",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val items = Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct()
       val p0 = items.groupBy("l_orderkey")

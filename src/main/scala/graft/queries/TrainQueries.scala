@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.OracleSql._
 import graft.operators.{Dedup, Similarity, TextAnalysis => TA}
 
 /** Round-3 training-data operators: statistical quality signals
@@ -20,19 +21,6 @@ import graft.operators.{Dedup, Similarity, TextAnalysis => TA}
   * only ever happens inside explicitly size-bounded cells.
   */
 object TrainQueries {
-
-  private val duckTokens = "string_split_regex(trim(text), '\\s+')"
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
-
-  private def duckDot(a: String, b: String): String =
-    s"list_reduce(list_transform(range(1, len($a)+1), " +
-      s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"
-
-  private def duckCos(a: String, b: String): String =
-    s"round(${duckDot(a, b)} / (sqrt(${duckDot(a, a)}) * sqrt(${duckDot(b, b)})), 6)"
 
   /** q77 — bigram language-model scoring: train an add-one-smoothed
     * bigram LM on the corpus itself, then score every document by its
@@ -57,7 +45,6 @@ object TrainQueries {
     */
   val q77 = Q("q77_bigram_lm",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val docs = Tables.load(s, dir, "documents")
         .filter(TA.tokenCount(col("text")) >= 2)
         .select(col("doc_id"),
@@ -119,7 +106,6 @@ object TrainQueries {
     */
   val q78 = Q("q78_semdedup",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val emb = Tables.load(s, dir, "embeddings")
       val cent = emb.filter(col("vec_id") < 32)
         .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
@@ -184,7 +170,6 @@ object TrainQueries {
     */
   val q79 = Q("q79_dup_ngram_spans",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val gd = Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           explode(call_function("graft_shingle_hash_list", col("text"), lit(8))).as("gh"))
@@ -772,7 +757,6 @@ object TrainQueries {
     */
   val q91 = Q("q91_eval_containment",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val docs = Tables.load(s, dir, "documents")
       val hs = call_function("graft_shingle_hashes", col("text"), lit(3))
       val trainSet = docs.filter(pmod(col("doc_id"), lit(97)) =!= 0)
